@@ -51,8 +51,8 @@ def cmd_load_data(args) -> int:
     if args.format == "csv":
         if not args.schema:
             # schema-declared discipline: inference-free CSV would land
-            # all-string counters that rollups then NULL out on cast
-            # (r10 review) — fail at load, not three stages later
+            # all-string counters that rollups then NULL out on cast —
+            # fail at load, not three stages later
             print("--schema is required for --format csv", file=sys.stderr)
             return 2
         pkg = read_csv_harvest(spark, args.file, schema=args.schema)
@@ -62,7 +62,7 @@ def cmd_load_data(args) -> int:
         if args.dn_col != "dn" or args.ts_col != "ts":
             # the 3GPP pivot emits fixed (dn, ts) columns; silently
             # accepting the flags would fail later with an unresolved
-            # column (r10 review)
+            # column
             print("--dn-col/--ts-col are fixed to dn/ts for --format xml",
                   file=sys.stderr)
             return 2
@@ -75,10 +75,10 @@ def cmd_load_data(args) -> int:
             .withColumn("ts", F.to_timestamp("ts"))
         )
     entities_store = f"{args.base_dir}/_entities"
-    # explicit existence check, NOT try/except: a bare except here turned
-    # a corrupt footer / permission error into "empty directory", minting
-    # fresh hash ids for every DN and silently splitting entity history
-    # across two ids (r10 review) — real read failures must surface
+    # explicit existence check, NOT try/except: a bare except here would
+    # turn a corrupt footer / permission error into "empty directory",
+    # minting fresh hash ids for every DN and silently splitting entity
+    # history across two ids — real read failures must surface
     if os.path.isdir(entities_store) and any(
         not e.startswith("_") for e in os.listdir(entities_store)
     ):
@@ -108,7 +108,7 @@ def cmd_materialize(args) -> int:
 
     spark = _spark(args)
     if args.root:
-        # r6: tick every ladder materialization the live instance declares
+        # tick every ladder materialization the live instance declares
         # (time_aggregations blocks) — the daemon loop's one-shot form
         from minerva_etl_46_spark.instance import load_live
         from minerva_etl_46_spark.plans.aggregation import specs_from_instance
@@ -146,9 +146,8 @@ def cmd_trigger(args) -> int:
     kpi = spark.read.parquet(args.kpi)
     notes = evaluate_rules(kpi, rules, entity_col=args.entity_col,
                            ts_col=args.ts_col)
-    # cut lineage before write + count: without it the count() re-ran the
-    # whole KPI scan + per-rule union a second time for one stat line
-    # (r10 review — the same discipline line 89 documents)
+    # cut lineage before write + count: without it the count() would
+    # re-run the whole KPI scan and rule evaluation for one stat line
     notes = notes.localCheckpoint(eager=True)
     store = TrendStorePartStorage(args.base_dir, args.notification_store)
     store.write(notes, ts_col=args.ts_col)
@@ -270,7 +269,9 @@ def cmd_retention(args) -> int:
 
     from minerva_etl_46_spark.sources.trendstore import TrendStorePartStorage
 
-    store = TrendStorePartStorage(args.base_dir, args.part)
+    # the part's OWN grid: a default-sized handle would floor the cutoff
+    # to the wrong partition boundary and keep expired partitions
+    store = TrendStorePartStorage.open(args.base_dir, args.part)
     cutoff = int(time.time()) - args.days * 86400
     dropped = store.apply_retention(cutoff)
     print(json.dumps({"dropped_partitions": dropped}))
@@ -284,8 +285,7 @@ def cmd_compact(args) -> int:
     )
 
     store = TrendStorePartStorage(args.base_dir, args.part)
-    done = compact_partitions(store, _spark(args),
-                              target_files_per_partition=args.target_files)
+    done = compact_partitions(store, _spark(args))
     print(json.dumps({"compacted_partitions": done}))
     return 0
 
@@ -456,10 +456,10 @@ def build_parser() -> argparse.ArgumentParser:
     rt.add_argument("--days", type=int, required=True)
     rt.set_defaults(fn=cmd_retention)
 
-    cp = sub.add_parser("compact", help="rewrite small-file partitions")
+    cp = sub.add_parser("compact", help="rewrite multi-file partitions "
+                        "to one file each")
     cp.add_argument("--base-dir", required=True)
     cp.add_argument("--part", required=True)
-    cp.add_argument("--target-files", type=int, default=1)
     cp.set_defaults(fn=cmd_compact)
 
     co = sub.add_parser("corpus", help="build a training corpus "

@@ -72,8 +72,8 @@ def normalize_ts_columns(df, cols, table: str = "<frame>"):
     """Normalize timestamp-like columns to TIMESTAMP (LTZ) at a frame
     entry boundary — parquet load, stream source, staged upsert input.
 
-    The fixture shape has changed across rounds (``events.ts``: ns-long →
-    ns-timestamp → µs TIMESTAMP_NTZ), so every shape any round has produced
+    The fixture shape has changed across regenerations (``events.ts``:
+    ns-long → ns-timestamp → µs TIMESTAMP_NTZ), so every shape seen so far
     is handled; anything else fails fast with the observed dtype instead of
     surfacing nine scattered DATATYPE_MISMATCH analysis errors downstream.
 
@@ -84,8 +84,8 @@ def normalize_ts_columns(df, cols, table: str = "<frame>"):
       (~1.7e15 for 2024), ms (~1.7e12) or s (~1.7e9) longs all fall far
       below, so a fixture regeneration that silently switches scale —
       the shape has already changed three times — fails loudly with the
-      observed value instead of misreading every timestamp by 10³–10⁹
-      (ADVICE r4). assert_true returns NULL when the predicate holds, so
+      observed value instead of misreading every timestamp by 10³–10⁹.
+      assert_true returns NULL when the predicate holds, so
       the filter is a plan-visible no-op: no extra Spark job at load,
       zero cost until a row actually violates it.
     - ``timestamp_ntz``: cast to LTZ (identity under UTC session tz).
@@ -148,10 +148,9 @@ def align_end(ts: Column | str, g: Granularity, tz: str = "UTC") -> Column:
     """Minerva-convention period timestamp: the END of the period the raw
     timestamp falls in (start-exclusive, end-inclusive grid).
 
-    A timestamp exactly ON the grid closes its own period (matches
-    bucket_epoch_end's ceil convention): the 3GPP XML harvest emits
-    granPeriod endTime values that are always exact period ends, and those
-    must map to themselves, not one period later.
+    A timestamp exactly ON the grid closes its own period: the 3GPP XML
+    harvest emits granPeriod endTime values that are always exact period
+    ends, and those must map to themselves, not one period later.
 
     Second-based: ceil(epoch/g)*g. Calendar: add the interval IN LOCAL
     TIME, and only when the local timestamp is not already on the unit
@@ -161,11 +160,12 @@ def align_end(ts: Column | str, g: Granularity, tz: str = "UTC") -> Column:
     Apr 1 midnight after a DST shift)."""
     c = ensure_timestamp(ts)
     if not g.is_calendar:
-        # ceil on the MICROSECOND grid, exact integer arithmetic: the
-        # old cast("long") floored sub-second parts first, so a ts just
-        # past a grid point (10:00:00.5) was labeled as CLOSING at 10:00
-        # — into the previous period, violating the (start, end]
-        # contract (r10 review). pmod form = G·ceil(us/G) for all signs.
+        # ceil on the MICROSECOND grid, exact integer arithmetic: flooring
+        # to whole seconds first would label a ts just past a grid point
+        # (10:00:00.5) as CLOSING at 10:00 — into the previous period,
+        # violating the (start, end] contract. This is the one period-END
+        # rule: harvest alignment and rollup labels both come from here.
+        # pmod form = G·ceil(us/G) for all signs.
         us = F.unix_micros(c)
         G = g.seconds * 1_000_000
         end_us = (us + F.lit(G - 1)) - F.pmod(us + F.lit(G - 1), F.lit(G))
@@ -179,23 +179,11 @@ def align_end(ts: Column | str, g: Granularity, tz: str = "UTC") -> Column:
 
 
 def bucket_epoch_end(ts: Column | str, g: Granularity) -> Column:
-    """Period-END bucket key (Minerva convention): the grid point CLOSING
-    the period (start-exclusive, end-inclusive]. A timestamp exactly on
-    the grid closes its own period: ceil(epoch/g)*g.
-
-    Use for END-labeled trend data (harvested packages, generated
-    rollups); bucket_epoch (floor) is the [start, end) analytics flavor.
-    """
-    if g.is_calendar:
-        raise NotImplementedError("END-labeled calendar buckets: use align_end")
-    c = ensure_timestamp(ts)
-    # µs-grid ceil, same exact-integer form (and the same sub-second fix)
-    # as align_end above — the two MUST agree or harvest alignment and
-    # rollup labels drift apart
-    us = F.unix_micros(c)
-    G = g.seconds * 1_000_000
-    end_us = (us + F.lit(G - 1)) - F.pmod(us + F.lit(G - 1), F.lit(G))
-    return (end_us / F.lit(1_000_000)).cast("long")
+    """Period-END bucket key as epoch seconds BIGINT (Minerva convention,
+    (start, end]): align_end's grid point, so harvest alignment and
+    rollup labels cannot drift apart. bucket_epoch (floor) is the
+    [start, end) analytics flavor."""
+    return align_end(ts, g).cast("long")
 
 
 def bucket_epoch(ts: Column | str, g: Granularity) -> Column:

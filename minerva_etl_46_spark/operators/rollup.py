@@ -24,22 +24,24 @@ from pyspark.sql import functions as F
 
 from minerva_etl_46_spark.catalog import Trend
 from minerva_etl_46_spark.functions.kpi import DEC
-from minerva_etl_46_spark.functions.timestamps import Granularity, bucket_epoch
+from minerva_etl_46_spark.functions.timestamps import (
+    Granularity,
+    align_end,
+    align_floor,
+)
 
 
-def _agg_column(t: Trend, value_col: str, order_col: Column, kind: str = "time",
-                exact: bool = True) -> Column:
+def _agg_column(t: Trend, value_col: str, order_col: Column,
+                kind: str = "time") -> Column:
     """Build the aggregate expression for one trend column.
 
     kind selects the declared function: 'time' (time_aggregation) or
     'entity' (entity_aggregation) — the two can differ per trend (e.g. a
     gauge averages over time but sums over entities).
 
-    exact=True routes double sums through the DECIMAL accumulator
-    (order-insensitive, oracle-reproducible — functions/kpi.py); it costs
-    ~2× on sum-heavy rollups (measured in scale_probe.py). Production
-    pipelines that tolerate double summation-order jitter set exact=False
-    for native codegen'd double sums.
+    Double sums and averages go through the DECIMAL accumulator:
+    order-insensitive across partitions, so a rollup reproduces
+    bit-for-bit run to run and against the oracle (functions/kpi.py).
 
     first/last use min_by/max_by over a deterministic ordering struct —
     Spark's bare first()/last() are order-dependent and non-deterministic
@@ -48,13 +50,8 @@ def _agg_column(t: Trend, value_col: str, order_col: Column, kind: str = "time",
     fn = t.time_aggregation if kind == "time" else t.entity_aggregation
     c = F.col(value_col)
     if fn == "sum":
-        if not exact:
-            return F.sum(c)
-        # exact decimal accumulator: order-insensitive across partitions
         return F.sum(c.cast(DEC)).cast("double")
     if fn == "avg":
-        if not exact:
-            return F.avg(c)
         return F.sum(c.cast(DEC)).cast("double") / F.count(c)
     if fn == "min":
         return F.min(c)
@@ -84,7 +81,6 @@ def time_rollup(
     trends: Mapping[str, Trend],
     order_cols: tuple[str, ...] | None = None,
     bucket_col: str = "bucket",
-    exact: bool = True,
     label: str = "start",
     tz: str = "UTC",
 ) -> DataFrame:
@@ -102,28 +98,13 @@ def time_rollup(
     (Minerva instance-local alignment, SURVEY §1.2); ignored for
     second-based granularities, whose grids are tz-free.
     order_cols: deterministic ordering key for first/last trends
-    (defaults to (ts_col,)). exact: see _agg_column.
+    (defaults to (ts_col,)).
     """
-    from minerva_etl_46_spark.functions.timestamps import (
-        align_end,
-        align_floor,
-        bucket_epoch_end,
-    )
-
     order = F.struct(*[F.col(c) for c in (order_cols or (ts_col,))])
-    aggs = [_agg_column(t, name, order, exact=exact).alias(name)
+    aggs = [_agg_column(t, name, order).alias(name)
             for name, t in trends.items()]
-    if granularity.is_calendar:
-        aligned = (
-            align_end(ts_col, granularity, tz)
-            if label == "end"
-            else align_floor(ts_col, granularity, tz)
-        )
-        bucket = aligned.cast("long")
-    elif label == "end":
-        bucket = bucket_epoch_end(ts_col, granularity)
-    else:
-        bucket = bucket_epoch(ts_col, granularity)
+    align = align_end if label == "end" else align_floor
+    bucket = align(ts_col, granularity, tz).cast("long")
     return (
         df.groupBy(F.col(entity_col), bucket.alias(bucket_col))
         .agg(*aggs)
@@ -150,9 +131,9 @@ def entity_rollup(
         "inner",
     )
     # first/last ordering: the group keys are (target, bucket), so the
-    # bucket alone is CONSTANT within every group — ordering by it made
-    # first/last entity aggregations depend on task order, the exact
-    # hazard the module docstring promises to prevent (r10 review). The
+    # bucket alone is CONSTANT within every group — ordering by it would
+    # make first/last entity aggregations depend on task order, the
+    # hazard the module docstring promises to prevent. The
     # SOURCE entity id breaks the tie deterministically: within one
     # (target, bucket) group each row is a distinct source entity, so
     # (bucket, source) is a total order and first = smallest source id.

@@ -32,7 +32,6 @@ def generate_time_rollup(
     target_granularity: str,
     entity_col: str = "entity_id",
     ts_col: str = "ts",
-    exact: bool = True,
     **spec_kw,
 ) -> MaterializationSpec:
     """Catalog declaration → a time-rollup materialization
@@ -45,8 +44,7 @@ def generate_time_rollup(
     tz = spec_kw.get("tz", "UTC")
     if g_to.is_calendar:
         # calendar granularities have no fixed second count (seconds is
-        # None — passing it through previously broke every generated
-        # 1d/1w/1month ladder step, r10 review): pick the largest grid
+        # None, which no partition grid accepts): pick the largest grid
         # that tiles every LOCAL period boundary — the UTC day grid when
         # aligning in UTC, the hour grid for whole-hour-offset zones
         # (run_window's tiling check rejects anything off-grid loudly)
@@ -72,10 +70,9 @@ def generate_time_rollup(
         # tz flows BOTH to the engine's window alignment (via spec_kw)
         # and to the rollup's bucket labels — split alignment would
         # label local-window rows onto the neighbor window's partition
-        # grid, which its dynamic overwrite then clobbers (r10 review)
+        # grid, which its dynamic overwrite then clobbers
         return time_rollup(rows, entity_col, ts_col, g_to, trends,
-                           bucket_col="bucket", exact=exact, label="end",
-                           tz=tz)
+                           bucket_col="bucket", label="end", tz=tz)
 
     return MaterializationSpec(
         name=f"{part_name}_{store.granularity}_to_{target_granularity}",
@@ -135,7 +132,7 @@ def generate_entity_rollup(
 
 
 def specs_from_instance(root: str, instance, **spec_kw) -> list[MaterializationSpec]:
-    """The YAML→ladder glue (r6): every trend store's declared
+    """The YAML→ladder glue: every trend store's declared
     ``time_aggregations`` becomes one generated time-rollup
     materialization per part, and every ``entity_aggregations`` entry
     one entity-rollup materialization (edges read from the live root's

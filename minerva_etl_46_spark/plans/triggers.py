@@ -3,13 +3,16 @@
 
 Rules are data (catalog.TriggerRule): a boolean KPI predicate, a weight
 expression, and the columns packed into the notification's JSON details.
-Evaluation is a pure DataFrame pipeline — filter(expr) → select(struct) —
-so Catalyst fuses rule evaluation into the KPI scan (predicate pushdown
-into the rollup when possible). Notifications append to a notification
-store (D7), here a partitioned dataset like any trend part.
+Evaluation is a pure DataFrame pipeline — filter(any rule) → one
+conditional rule array → explode — so Catalyst fuses every rule into the
+one KPI scan (predicate pushdown into the rollup when possible).
+Notifications append to a notification store (D7), here a partitioned
+dataset like any trend part.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -18,9 +21,7 @@ from minerva_etl_46_spark.catalog import TriggerRule
 
 
 def _rule_payload(rule: TriggerRule):
-    """The (rule, weight, details) columns ONE rule contributes — the
-    single compilation point both evaluation shapes share (r12: the
-    streaming daemon previously re-spelled these as inline literals)."""
+    """The (rule, weight, details) columns ONE rule contributes."""
     details = F.to_json(F.struct(*[F.col(c) for c in rule.details_cols])) \
         if rule.details_cols else F.lit(None).cast("string")
     return (
@@ -30,70 +31,31 @@ def _rule_payload(rule: TriggerRule):
     )
 
 
-def evaluate_rule(
-    kpi_df: DataFrame,
-    rule: TriggerRule,
-    entity_col: str = "entity_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Run one rule over a KPI frame → notification rows
-    (entity_id, ts, rule, weight, details JSON)."""
-    hits = kpi_df.filter(F.expr(rule.predicate_sql))
-    return hits.select(
-        F.col(entity_col).alias("entity_id"),
-        F.col(ts_col).alias("ts"),
-        *_rule_payload(rule),
-    )
-
-
 def evaluate_rules(kpi_df: DataFrame, rules: list[TriggerRule],
                    entity_col: str = "entity_id", ts_col: str = "ts") -> DataFrame:
-    """All rules in one pass: a union of per-rule pipelines. Catalyst shares
-    the scan (same source subtree); each rule contributes a filter+project.
+    """All rules in one pass → notification rows (entity_id, ts, rule,
+    weight, details JSON), one per (KPI row, firing rule), rules in list
+    order. A rule whose predicate is NULL does not fire.
 
-    An empty rule list raises: the contract is a DataFrame, and returning
-    None propagated an opaque AttributeError into whatever the caller did
-    next (r10 review) — an instance with zero triggers should not be
-    evaluating at all."""
+    Each rule compiles to a conditional struct, the rules fold into one
+    array, and the hits explode out of the filtered array — no union, so
+    the KPI subtree is planned once. Over a streaming aggregate this is
+    also the only shape every output mode supports: a union of filtered
+    branches would plan one parallel streaming aggregation per rule.
+    The OR of the predicates filters first, so a predicate over scan
+    columns still reaches the parquet scan's PushedFilters.
+
+    An empty rule list raises: the contract is a DataFrame, and an
+    instance with zero triggers should not be evaluating at all."""
     if not rules:
         raise ValueError(
             "evaluate_rules needs at least one rule — an instance with no "
             "triggers has nothing to evaluate")
-    out = None
-    for r in rules:
-        n = evaluate_rule(kpi_df, r, entity_col, ts_col)
-        out = n if out is None else out.unionByName(n)
-    return out
-
-
-def evaluate_rules_fused(
-    kpi_df: DataFrame,
-    rules: list[TriggerRule],
-    entity_col: str = "entity_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """All rules in one pass WITHOUT a union: each rule compiles to a
-    conditional struct, the rules fold into one array, and the hits
-    explode out of the filtered array. Same output contract as
-    evaluate_rules (entity_id, ts, rule, weight, details JSON; rule
-    evaluation order = list order).
-
-    This is the STREAMING-safe shape: a union of filtered branches over
-    a streaming aggregate plans one parallel streaming aggregation per
-    rule, while this form stays a single agg — which every output mode
-    supports (streaming/jobs.py::trigger_notifications_stream). It is
-    equally valid for batch; batch keys keep the union form only because
-    their plan budgets pin it. Rules are DATA here exactly as in
-    evaluate_rules — one compiler, two execution shapes (r12)."""
-    if not rules:
-        raise ValueError(
-            "evaluate_rules_fused needs at least one rule — an instance "
-            "with no triggers has nothing to evaluate")
+    preds = [F.expr(r.predicate_sql) for r in rules]
     arr = F.array(*[
-        F.when(F.expr(r.predicate_sql), F.struct(*_rule_payload(r)))
-        for r in rules
+        F.when(p, F.struct(*_rule_payload(r))) for p, r in zip(preds, rules)
     ])
-    return kpi_df.select(
+    return kpi_df.filter(reduce(lambda a, b: a | b, preds)).select(
         F.col(entity_col).alias("entity_id"),
         F.col(ts_col).alias("ts"),
         F.explode(F.filter(arr, lambda x: x.isNotNull())).alias("r"),

@@ -16,6 +16,7 @@ deterministic (ts, entity_id) order.
 
 from __future__ import annotations
 
+import calendar
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -66,10 +67,10 @@ class TrendQuery:
             df = df.join(F.broadcast(self.entity_set), entity_col, "left_semi")
         if self.columns:
             # dedupe against the always-present key columns: a client
-            # naming ts/entity_id in `columns` (a natural request)
-            # previously produced a duplicate-named frame and the keyset
-            # expressions failed with AMBIGUOUS_REFERENCE — a 500 for a
-            # well-formed request (r10 review)
+            # naming ts/entity_id in `columns` (a natural request) would
+            # otherwise produce a duplicate-named frame whose keyset
+            # expressions fail with AMBIGUOUS_REFERENCE — a 500 for a
+            # well-formed request
             extra = [c for c in self.columns if c not in (entity_col, ts_col)]
             df = df.select(entity_col, ts_col, *extra)
         else:
@@ -88,11 +89,25 @@ class TrendQuery:
         )
 
 
+def keyset_cursor(row, entity_col: str = "entity_id",
+                  ts_col: str = "ts") -> tuple[int, int]:
+    """The ``after`` cursor (epoch µs, entity id) that resumes paging
+    just past ``row``. The time column is either a collected timestamp
+    (raw parts) or epoch seconds (rollup parts' ``bucket``)."""
+    ts = row[ts_col]
+    if isinstance(ts, int):
+        us = ts * 1_000_000
+    else:
+        # collected timestamps are naive in the session tz (UTC) —
+        # datetime.timestamp() would reinterpret them in the MACHINE tz;
+        # timegm is tz-independent
+        us = calendar.timegm(ts.timetuple()) * 1_000_000 + ts.microsecond
+    return us, row[entity_col]
+
+
 def page_through(spark: SparkSession, query: TrendQuery,
                  entity_col: str = "entity_id", ts_col: str = "ts"):
     """Generator over full pages — each page is one bounded Spark job."""
-    import calendar
-
     after = query.after
     while True:
         q = TrendQuery(**{**query.__dict__, "after": after})
@@ -100,12 +115,6 @@ def page_through(spark: SparkSession, query: TrendQuery,
         if not rows:
             return
         yield rows
-        last = rows[-1]
-        ts = last[ts_col]
-        # collected timestamps are naive in the session tz (UTC) —
-        # datetime.timestamp() would reinterpret them in the MACHINE tz;
-        # timegm is tz-independent
-        us = calendar.timegm(ts.timetuple()) * 1_000_000 + ts.microsecond
-        after = (us, last[entity_col])
+        after = keyset_cursor(rows[-1], entity_col, ts_col)
         if len(rows) < query.page_size:
             return

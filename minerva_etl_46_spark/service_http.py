@@ -1,6 +1,5 @@
 """Thin HTTP face over the data-service pager (SURVEY.md §2.6 O1/O2;
-[ref: minerva-service REST API — UNVERIFIED [L]]; VERDICT r5 "What's
-missing" #4).
+[ref: minerva-service REST API — UNVERIFIED [L]]).
 
 Stdlib-only (http.server) so the engine image needs no web framework.
 One worker thread per request against a SHARED SparkSession — safe
@@ -28,7 +27,6 @@ no row can be skipped between pages (service.py docstring).
 
 from __future__ import annotations
 
-import calendar
 import json
 from datetime import datetime
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -36,7 +34,7 @@ from urllib.parse import parse_qs, urlparse
 
 from pyspark.sql import SparkSession
 
-from minerva_etl_46_spark.service import TrendQuery
+from minerva_etl_46_spark.service import TrendQuery, keyset_cursor
 from minerva_etl_46_spark.sources.trendstore import TrendStorePartStorage
 
 
@@ -44,12 +42,6 @@ def _jsonable(v):
     if isinstance(v, datetime):
         return v.isoformat()
     return v
-
-
-def _row_us(ts) -> int:
-    if isinstance(ts, int):  # epoch-seconds time column (rollup `bucket`)
-        return ts * 1_000_000
-    return calendar.timegm(ts.timetuple()) * 1_000_000 + ts.microsecond
 
 
 class DataServiceHandler(BaseHTTPRequestHandler):
@@ -78,7 +70,7 @@ class DataServiceHandler(BaseHTTPRequestHandler):
 
                 # attr_* dirs are attribute stores (no p_bucket layout):
                 # advertising them here would send a discovery-following
-                # client into a 500 on /query (r10 review)
+                # client into a 500 on /query
                 parts = sorted(
                     e for e in os.listdir(self.server.base_dir)
                     if os.path.isdir(os.path.join(self.server.base_dir, e))
@@ -116,7 +108,7 @@ class DataServiceHandler(BaseHTTPRequestHandler):
         # open() reads the part's OWN partition grid from its metadata:
         # a server-wide size smaller than the part's actual grid would
         # make read_window's range floor land ABOVE the real partition
-        # start and silently omit existing rows (r10 review). The server
+        # start and silently omit existing rows. The server
         # conf is only the fallback for pre-metadata parts.
         storage = TrendStorePartStorage.open(
             self.server.base_dir, part,
@@ -135,9 +127,7 @@ class DataServiceHandler(BaseHTTPRequestHandler):
                 f"{len(ents)} entities exceeds MAX_PAGE_SIZE {MAX_PAGE_SIZE}")
         # rollup parts carry their period label in `bucket` (epoch-s),
         # raw parts in `ts` (timestamp) — ts_col/entity_col let one
-        # service route page either (TrendQuery.run already supported
-        # them; the HTTP surface previously pinned "ts"/"entity_id", so
-        # ladder outputs were unservable)
+        # service route page either
         ts_col = one("ts_col", "ts")
         entity_col = one("entity_col", "entity_id")
         query = TrendQuery(
@@ -154,8 +144,7 @@ class DataServiceHandler(BaseHTTPRequestHandler):
         out = [{k: _jsonable(v) for k, v in r.asDict().items()} for r in rows]
         next_after = None
         if len(rows) == query.page_size:
-            last = rows[-1]
-            next_after = [_row_us(last[ts_col]), last[entity_col]]
+            next_after = list(keyset_cursor(rows[-1], entity_col, ts_col))
         return {"rows": out, "next_after": next_after}
 
 
@@ -182,7 +171,7 @@ class DataServiceHandler(BaseHTTPRequestHandler):
             raise KeyError(f"no attribute store {store_name!r}")
         # validate the requested attrs against the stored schema up front:
         # an unknown attr must be a 400 naming it, not an AnalysisException
-        # 500 from deep inside the as-of join / projection (r10 review)
+        # 500 from deep inside the as-of join / projection
         hist_cols = set(store.read_history(spark).columns)
         unknown = [a for a in attrs if a not in hist_cols]
         if unknown:
@@ -217,8 +206,8 @@ class DataServiceHandler(BaseHTTPRequestHandler):
                 raise ValueError(
                     f"{len(ents)} entities exceeds MAX_PAGE_SIZE "
                     f"{MAX_PAGE_SIZE}")
-            # honor the documented attrs projection (the pre-r10 route
-            # returned EVERY stored column regardless of attrs)
+            # honor the documented attrs projection, not every stored
+            # column
             df = store.curr(spark).select("entity_id", "ts", *attrs)
             if ents:
                 df = df.filter(F.col("entity_id").isin(ents))

@@ -32,7 +32,7 @@ MODIFIED_LOG = "_modified_log"
 #: Spark's parquet reader ignores it). The partition grid is a property
 #: of the DATA, not of whoever constructs a storage handle: a server
 #: configured with the wrong partition_size_s would silently prune away
-#: existing partitions on range reads (r10 review). Writers record the
+#: existing partitions on range reads. Writers record the
 #: grid here; readers open with ``TrendStorePartStorage.open`` to get it.
 PART_META = "_part_meta.json"
 
@@ -51,13 +51,6 @@ class TrendStorePartStorage:
     base_dir: str
     name: str
     partition_size_s: int = 86400
-    #: write fan-out per partition bucket. 1 (default) routes each bucket
-    #: to exactly one task — one file per bucket per write, maximum
-    #: cross-bucket parallelism (a multi-day backfill writes all days in
-    #: parallel). Raise for a HUGE single-bucket batch (one day of a
-    #: 100 TB feed): >1 adds an intra-bucket salt so the bucket's rows
-    #: spread over N tasks/files.
-    files_per_partition: int = 1
 
     @property
     def path(self) -> str:
@@ -125,34 +118,12 @@ class TrendStorePartStorage:
             # a __HIVE_DEFAULT_PARTITION__ directory the time-grid
             # bookkeeping (modified log, retention, compaction) cannot
             # attribute, and _log_modified would crash AFTER the data
-            # landed. Reject BEFORE anything is written (r10 review).
+            # landed. Reject BEFORE anything is written.
             raise ValueError(
                 f"part {self.name!r}: {ts_col} contains NULLs — rows "
                 "without a timestamp have no partition; filter or repair "
                 "them upstream (write rejected before any data landed)")
-        # co-locate each bucket's rows before partitionBy: without this,
-        # every input task opens a writer per bucket it sees — T input
-        # tasks × B buckets small files, and a single-file source writes
-        # ALL buckets serially in one task. With it, bucket count (times
-        # the salt fan-out) is the write parallelism AND the file count.
-        # explicit numPartitions (known driver-side from `touched`): an
-        # unnumbered repartition lets AQE coalesce the tiny-batch case
-        # back to 1-2 tasks, serializing one directory write per bucket
-        n_parts = max(1, len(touched)) * self.files_per_partition
-        if self.files_per_partition > 1:
-            salted = out.withColumn(
-                "_w_salt",
-                F.pmod(F.hash(*[c for c in df.columns]),
-                       F.lit(self.files_per_partition)))
-            out = salted.repartition(
-                n_parts, "p_bucket", "_w_salt").drop("_w_salt")
-        else:
-            out = out.repartition(n_parts, "p_bucket")
-        # per-write option, not session conf: mutating the session would
-        # silently flip every later overwrite on this session to dynamic
-        (out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("p_bucket").parquet(self.path))
+        _overwrite_partitions(out, self.path, len(touched))
         self._log_modified(spark, touched, job_id)
         return sorted(touched)
 
@@ -238,8 +209,8 @@ def _int_bucket_dirs(path: str):
     Non-integer partition values (__HIVE_DEFAULT_PARTITION__ from a
     foreign writer without the null guard, or hand-made debris) are
     SKIPPED: retention and compaction must never delete or rewrite what
-    they can't place on the time grid — int() crashing mid-scan (the
-    pre-r10 behavior) permanently wedged both for the whole part."""
+    they can't place on the time grid — int() crashing mid-scan would
+    permanently wedge both for the whole part."""
     for entry in sorted(os.listdir(path)):
         if not entry.startswith("p_bucket="):
             continue
@@ -249,45 +220,48 @@ def _int_bucket_dirs(path: str):
             continue
 
 
-def compact_partitions(storage: TrendStorePartStorage, spark: SparkSession,
-                       target_files_per_partition: int = 1) -> int:
-    """Small-file compaction (operational need S6-adjacent): repeated
-    incremental upserts leave each partition with one file per write;
-    at fleet scale that degrades scan planning and NameNode/listing cost.
+def _overwrite_partitions(df: DataFrame, path: str, n_buckets: int) -> None:
+    """The one partition-overwrite tail: rewrite exactly the p_bucket
+    partitions present in ``df``, one task and one file per bucket.
 
-    ONE job for the whole store (r8; the per-directory loop it replaces
-    ran one sequential Spark job per partition — a day-partitioned year
-    is 365 serial rewrites): list the directories needing work
-    driver-side (bounded by partition count), partition-prune a single
-    read to exactly those buckets, co-locate each bucket's rows on one
-    task, dynamic-overwrite them in one write. Untouched partitions are
-    never read or rewritten; lineage is cut before the overwrite (Spark
-    cannot overwrite a path it is still reading). Returns partitions
-    compacted."""
+    Co-locating each bucket's rows before partitionBy matters: without
+    it every input task opens a writer per bucket it sees — T input
+    tasks × B buckets small files, and a single-file source writes ALL
+    buckets serially in one task. The explicit partition count (known
+    driver-side) keeps AQE from coalescing a tiny batch back to 1-2
+    tasks, which would serialize one directory write per bucket."""
+    # per-write option, not session conf: mutating the session would
+    # silently flip every later overwrite on this session to dynamic
+    (df.repartition(max(1, n_buckets), "p_bucket")
+       .write.mode("overwrite")
+       .option("partitionOverwriteMode", "dynamic")
+       .partitionBy("p_bucket").parquet(path))
+
+
+def compact_partitions(storage: TrendStorePartStorage, spark: SparkSession) -> int:
+    """Small-file compaction (operational need S6-adjacent): append-mode
+    writers leave a partition with one file per write; at fleet scale
+    that degrades scan planning and NameNode/listing cost.
+
+    ONE job for the whole store, not one sequential job per partition
+    (a day-partitioned year would be 365 serial rewrites): list the
+    directories holding more than one file driver-side (bounded by
+    partition count), partition-prune a single read to exactly those
+    buckets and rewrite them through the same overwrite tail as
+    ``write``. Untouched partitions are never read or rewritten; lineage
+    is cut before the overwrite (Spark cannot overwrite a path it is
+    still reading). Returns partitions compacted."""
     if not os.path.isdir(storage.path):
         return 0
     need: list[int] = []
     for b, entry in _int_bucket_dirs(storage.path):
         pdir = os.path.join(storage.path, entry)
-        files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-        if len(files) > target_files_per_partition:
+        if sum(f.endswith(".parquet") for f in os.listdir(pdir)) > 1:
             need.append(b)
     if not need:
         return 0
     df = storage.read(spark).filter(
         F.col("p_bucket").isin(need))  # partition-pruned read
-    n_parts = len(need) * target_files_per_partition
-    if target_files_per_partition > 1:
-        cols = [c for c in df.columns if c != "p_bucket"]
-        df = (df.withColumn("_c_salt",
-                            F.pmod(F.xxhash64(*cols),
-                                   F.lit(target_files_per_partition)))
-              .repartition(n_parts, "p_bucket", "_c_salt")
-              .drop("_c_salt"))
-    else:
-        df = df.repartition(n_parts, "p_bucket")
-    df = df.localCheckpoint(eager=True)
-    (df.write.mode("overwrite")
-       .option("partitionOverwriteMode", "dynamic")
-       .partitionBy("p_bucket").parquet(storage.path))
+    _overwrite_partitions(df.localCheckpoint(eager=True), storage.path,
+                          len(need))
     return len(need)

@@ -490,17 +490,15 @@ def trigger_notifications_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """D10 as a STREAMING job — the reference's trigger daemon: hourly
     KPI windows aggregate continuously, rules fire as notifications per
     trigger. Rules are DATA (catalog.TriggerRule — the SAME specs the
-    batch trigger_notify key evaluates), compiled by the batch engine's
-    fused form (plans/triggers.py::evaluate_rules_fused): a conditional
-    rule array + explode over the ONE streaming aggregate. A union of
-    filtered branches would plan one parallel streaming aggregation per
-    rule; the fused form stays a single agg, which every output mode
+    batch trigger_notify key evaluates), compiled by the batch engine
+    (plans/triggers.py::evaluate_rules): a conditional rule array +
+    explode over the ONE streaming aggregate. A union of filtered
+    branches would plan one parallel streaming aggregation per rule;
+    the fused form stays a single agg, which every output mode
     supports. Output: (entity_id, ts, rule, weight, details JSON) — the
-    full batch trigger shape, sinks interchangeable (r11 review added
-    details; r12 lifted the inline rule literals into the shared
-    compiler)."""
+    full batch trigger shape, sinks interchangeable."""
     from minerva_etl_46_spark.catalog import TriggerRule
-    from minerva_etl_46_spark.plans.triggers import evaluate_rules_fused
+    from minerva_etl_46_spark.plans.triggers import evaluate_rules
 
     e = _read_events_stream(spark, sf_dir)
     kpi = (
@@ -529,7 +527,7 @@ def trigger_notifications_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         TriggerRule(name="error_burst", predicate_sql="n_errors >= 2",
                     weight_sql="5", details_cols=("n_errors", "bucket")),
     ]
-    notif = evaluate_rules_fused(kpi, rules)
+    notif = evaluate_rules(kpi, rules)
     return _run_to_memory(notif, "stream_trigger_out", spark)
 
 

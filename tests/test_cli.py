@@ -55,6 +55,35 @@ def test_cli_load_data_csv_and_retention(spark, tmp_path, capsys):
     assert left == []
 
 
+def test_cli_retention_uses_the_parts_own_grid(spark, tmp_path, capsys,
+                                              monkeypatch):
+    """retention on an hourly part floors the cutoff to the HOUR, read
+    from the part's metadata: a day-floored cutoff would keep the
+    expired hours before it."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    st = TrendStorePartStorage(str(tmp_path), "traffic_1h",
+                               partition_size_s=3600)
+    H0 = 1704067200  # 2024-01-01T00:00Z
+    st.write(spark.range(24).select(
+        F.col("id").alias("entity_id"),
+        F.timestamp_seconds(H0 + F.col("id") * 3600 + 600).alias("ts"),
+    ), ts_col="ts")
+    cutoff = H0 + 12 * 3600 + 1800  # 12:30, mid-day and mid-hour
+    with monkeypatch.context() as m:
+        m.setattr(time, "time", lambda: cutoff + 86400)
+        rc = main(["retention", "--base-dir", str(tmp_path),
+                   "--part", "traffic_1h", "--days", "1"])
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["dropped_partitions"] == [H0 + h * 3600 for h in range(12)]
+    left = sorted(e for e in os.listdir(st.path) if e.startswith("p_bucket="))
+    assert left == sorted(f"p_bucket={H0 + h * 3600}" for h in range(12, 24))
+
+
 def test_cli_load_data_xml(spark, tmp_path, capsys):
     x = tmp_path / "meas.xml"
     x.write_text(XML)
@@ -146,7 +175,7 @@ def test_cli_end_to_end_load_materialize_trigger(spark, tmp_path, capsys):
 
 def test_cli_compact_rewrites_multifile_partitions(spark, tmp_path, capsys):
     """compact: repeated upserts leave one file per write; the verb
-    rewrites each partition directory down to --target-files."""
+    rewrites each multi-file partition directory down to one file."""
     import os
 
     from pyspark.sql import functions as F

@@ -289,11 +289,11 @@ def test_every_page_plan_is_partition_pruned(spark, tmp_path):
     # advancement and plan-check EVERY page's DataFrame (r10 review:
     # asserting only the page count would let the generator path lose
     # pruning unnoticed) — cross-check totals against page_through.
-    # Cursor derivation reuses the production helper (_row_us) rather
-    # than a third copy of the timegm expression, so a tz-handling
+    # Cursor derivation reuses the production helper (keyset_cursor)
+    # rather than a copy of the timegm expression, so a tz-handling
     # change in the service can't leave this replica testing stale
     # semantics.
-    from minerva_etl_46_spark.service_http import _row_us
+    from minerva_etl_46_spark.service import keyset_cursor
 
     after, n_pages, n_rows = None, 0, 0
     while True:
@@ -306,8 +306,25 @@ def test_every_page_plan_is_partition_pruned(spark, tmp_path):
             break
         n_pages += 1
         n_rows += len(rows)
-        after = (_row_us(rows[-1]["ts"]), rows[-1]["entity_id"])
+        after = keyset_cursor(rows[-1])
         if len(rows) < 7:
             break
     assert n_pages > 2 and n_rows == 36
     assert sum(len(p) for p in page_through(spark, q)) == 36
+
+
+def test_page_through_rollup_part_epoch_bucket(spark, tmp_path):
+    """Rollup parts label rows with an epoch-seconds ``bucket``, not a
+    timestamp: page_through must derive its cursor from the int column
+    and return every row exactly once, in keyset order."""
+    st = TrendStorePartStorage(str(tmp_path), "svc_1h", partition_size_s=3600)
+    rows = [(e, H0 + 3600 * k, float(e * 10 + k))
+            for e in (1, 2, 3) for k in range(1, 5)]
+    st.write(spark.createDataFrame(
+        rows, schema="entity_id long, bucket long, v double"), ts_col="bucket")
+    q = TrendQuery(part=st, start_epoch=H0, end_epoch=H0 + 5 * 3600,
+                   columns=["v"], page_size=5)
+    pages = list(page_through(spark, q, ts_col="bucket"))
+    assert [len(p) for p in pages] == [5, 5, 2]
+    keys = [(r["bucket"], r["entity_id"]) for p in pages for r in p]
+    assert keys == sorted((b, e) for e, b, _ in rows)

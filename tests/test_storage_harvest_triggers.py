@@ -102,7 +102,9 @@ def test_csv_harvest_with_entity_resolution(spark, tmp_path):
 
 def test_trigger_rules_produce_weighted_notifications(spark):
     kpi = spark.createDataFrame(
-        [(1, "2024-01-01 01:00:00", 0.4, 100), (2, "2024-01-01 01:00:00", 0.9, 7)],
+        [(1, "2024-01-01 01:00:00", 0.4, 100), (2, "2024-01-01 01:00:00", 0.9, 7),
+         # every predicate evaluates to NULL on this row: it must not fire
+         (3, "2024-01-01 01:00:00", None, None)],
         schema="entity_id long, ts string, err_rate double, n long",
     ).withColumn("ts", F.to_timestamp("ts"))
     rules = [
@@ -118,6 +120,24 @@ def test_trigger_rules_produce_weighted_notifications(spark):
     hit = by_rule[("high_err", 2)]
     assert hit["weight"] == 90
     assert '"err_rate":0.9' in hit["details"]
+
+
+def test_trigger_predicate_reaches_parquet_scan(spark, tmp_path):
+    """A rule predicate over KPI scan columns must reach the parquet
+    reader's PushedFilters: evaluate_rules filters on the OR of the rule
+    predicates before building the rule array."""
+    path = str(tmp_path / "kpi")
+    spark.createDataFrame(
+        [(1, "2024-01-01 01:00:00", 0.4), (2, "2024-01-01 01:00:00", 0.9)],
+        schema="entity_id long, ts string, err_rate double",
+    ).withColumn("ts", F.to_timestamp("ts")).write.parquet(path)
+    rules = [TriggerRule(name="high_err", predicate_sql="err_rate > 0.5",
+                         weight_sql="1", details_cols=())]
+    notes = evaluate_rules(spark.read.parquet(path), rules)
+    plan = notes._jdf.queryExecution().executedPlan().toString()
+    pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
+    assert "GreaterThan(err_rate,0.5)" in pushed, plan
+    assert [r["entity_id"] for r in notes.collect()] == [2]
 
 
 def test_compact_partitions(spark, tmp_path):
@@ -173,20 +193,6 @@ def test_compact_only_touches_multifile_partitions(spark, tmp_path):
     nb = [f for f in os.listdir(pdir_b) if f.endswith(".parquet")]
     assert len(nb) == 1
     assert st.read(spark).count() == 4
-
-
-def test_write_files_per_partition_fans_out(spark, tmp_path):
-    """r8 write fan-out knob: files_per_partition=2 salts each bucket's
-    rows over 2 tasks/files (the huge-single-day-batch escape hatch)."""
-    st = TrendStorePartStorage(str(tmp_path), "part_e",
-                               partition_size_s=3600,
-                               files_per_partition=2)
-    rows = [(i, "2024-01-01 00:10:00", 1, float(i)) for i in range(64)]
-    st.write(_mini(spark, rows), ts_col="ts")
-    pdir = os.path.join(st.path, "p_bucket=1704067200")
-    files = [f for f in os.listdir(pdir) if f.endswith(".parquet")]
-    assert len(files) == 2
-    assert spark.read.parquet(st.path).count() == 64
 
 
 def test_jsonl_harvest_equals_csv_harvest(spark, tmp_path):
